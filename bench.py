@@ -105,9 +105,10 @@ spark = get_spark(cores=cores, app_name=f"bench-scaling-{{cores}}",
                   extra_conf={{"spark.driver.memory": f"{{heap_gb}}g"}})
 pages = spark.read.parquet(corpus)
 t0 = time.time()
-# durable-checkpoint mode for the timed legs — measured FASTER than light
-# mode at 800k docs on BOTH core counts (light 8c 790s vs ckpt ~400s;
-# light 2c 1264s vs ckpt 1026s, r4 probes): light mode's in-memory
+# durable parquet stage checkpoints are the pipeline's only mode: the
+# former in-memory "light" mode (lazy localCheckpoints, no resume) was
+# removed after measuring SLOWER at 800k docs on BOTH core counts (light
+# 8c 790s vs ckpt ~400s; light 2c 1264s vs ckpt 1026s, r4 probes) — its
 # localCheckpoint blocks (texts + fat signature arrays) starve execution
 # memory in the concurrent detector joins, while parquet checkpoints are
 # compressed, evictable, and re-readable with column pruning
@@ -417,8 +418,8 @@ def write_bench_md(timings: dict[str, float], scaling: dict | None) -> None:
             "## Scaling (north rule: N vs 4N parallelism on identical input)",
             "",
             f"Full dedup pipeline (collapse → unified sign → MinHash+SimHash+substring",
-            f"joins → CC → expand, durable stage checkpoints ON — measured faster than",
-            "light mode at both core counts; see bench.py) over "
+            f"joins → CC → expand, durable stage checkpoints — the removed light mode",
+            "measured slower at both core counts; see bench.py) over "
             f"{scaling['docs']:,}",
             f"deterministic synthetic pages. Each run is a fresh JVM {pin} to exactly",
             "its core budget, with "

@@ -146,15 +146,6 @@ def minhash_signature(elem_hashes: np.ndarray, a: np.ndarray, b: np.ndarray) -> 
     return sig
 
 
-def minhash_signature_batch(
-    list_of_hash_arrays: list, a: np.ndarray, b: np.ndarray
-) -> np.ndarray:
-    """(batch, k) uint64 signatures for a batch of documents."""
-    if not list_of_hash_arrays:
-        return np.empty((0, len(a)), dtype=np.uint64)
-    return np.stack([minhash_signature(h, a, b) for h in list_of_hash_arrays])
-
-
 # --- winnowing ---------------------------------------------------------------
 
 POLY_BASE = _U64(1000003)

@@ -134,7 +134,12 @@ def jaccard_pairs_with_drops(
     quadratic pair stream is produced row-at-a-time in codegen exactly
     like the former join's output, then partially aggregated map-side
     before the only other exchange (by pair). sort_array orders members
-    by id, so emitted pairs satisfy id1 < id2 by construction.
+    by id; the explicit ``id1 < id2`` filter drops the self-pairs a
+    repeated id would otherwise emit.
+
+    Precondition: ``id_col`` is unique. A repeated id is not a supported
+    input — its rows are never paired with each other, but each copy still
+    posts its shingles, so pairs with that id overstate ``inter_size``.
     """
     base = spread_small_input(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")), key="id"
@@ -179,7 +184,7 @@ def jaccard_pairs_with_drops(
         F.explode(
             F.slice("members", F.col("i") + 2, F.size("members"))
         ).alias("m2"),
-    )
+    ).where(F.col("id1") < F.col("m2.id"))
     inter = pairs_raw.groupBy(
         "id1",
         F.col("m2.id").alias("id2"),

@@ -1,4 +1,4 @@
-"""Candidate-pair generation joins with explicit skew handling.
+"""Candidate-pair generation: the one band join every detector uses.
 
 The LSH band equi-join (SURVEY.md §2.3; reference analogue: the lexsort
 adjacency scan in /root/reference/code/blocking/code/
@@ -9,25 +9,22 @@ explode, row memory O(bucket)) all derive from that single aggregation
 (r6; formerly a bucket-size aggregation + broadcast anti-join + a
 two-sided self-join that shuffled the postings twice). Hot keys (a band
 shared by an exact-dup cluster, a ubiquitous fingerprint) still make
-all-pairs generation quadratic in the bucket size, so two explicit
-controls are provided — the reference's analogue is its hard 25000-doc
-group guard (/root/reference/code/common.py:96):
+all-pairs generation quadratic in the bucket size, so the cap is
+explicit — the reference's analogue is its hard 25000-doc group guard
+(/root/reference/code/common.py:96): buckets above ``max_bucket_size``
+are excluded from pair generation and *accounted for* in a drops
+DataFrame (north_rule: documented drop counters, never silent
+truncation). ``_capped_buckets`` is that policy, shared with the fused
+simhash join (operators/simhash.simhash_verified_pairs).
 
-- ``max_bucket_size``: buckets above the cap are excluded from pair
-  generation and *accounted for* in a drops DataFrame (north_rule:
-  documented drop counters, never silent truncation).
-- ``salted_all_pairs``: an exact triangle-cell decomposition that splits a
-  hot key's all-pairs work across ``salt``² join cells so no single task
-  owns a whole hot bucket. Each unordered pair is produced exactly once.
-
-Both paths produce ordered pairs (id1 < id2), distinct.
+Pairs are ordered (id1 < id2) and distinct.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -37,12 +34,40 @@ class PairGenResult:
     drops: DataFrame  # (key..., bucket_size) buckets excluded by the cap
 
 
+def _capped_buckets(
+    postings: DataFrame,
+    key_cols: list[str],
+    member: Column,
+    max_bucket_size: int | None,
+) -> tuple[DataFrame, DataFrame]:
+    """(kept, drops): ``postings`` grouped per key into sorted ``members``
+    lists of ``member`` plus ``bucket_size``, split at the cap. ``kept``
+    holds (key..., members, bucket_size) for buckets within the cap (all
+    of them when ``max_bucket_size`` is None); ``drops`` holds (key...,
+    bucket_size) for the buckets excluded from pair generation (empty
+    when uncapped)."""
+    grouped = postings.groupBy(*key_cols).agg(
+        F.sort_array(F.collect_list(member)).alias("members"),
+        F.count("*").alias("bucket_size"),
+    )
+    if max_bucket_size is None:
+        drops = (
+            postings.select(*key_cols)
+            .limit(0)
+            .withColumn("bucket_size", F.lit(0).cast("long"))
+        )
+        return grouped, drops
+    drops = grouped.where(F.col("bucket_size") > max_bucket_size).select(
+        *key_cols, "bucket_size"
+    )
+    return grouped.where(F.col("bucket_size") <= max_bucket_size), drops
+
+
 def band_candidate_pairs(
     postings: DataFrame,
     key_cols: list[str],
     id_col: str = "id",
     max_bucket_size: int | None = None,
-    salt: int | None = None,
     probe_left: DataFrame | None = None,
     probe_unique: bool = False,
 ) -> PairGenResult:
@@ -55,7 +80,7 @@ def band_candidate_pairs(
     against the original table instead of a plain self-join — the
     multi-probe pattern (e.g. 1-bit simhash band flips). Bucket sizes and
     the cap are always measured on the ORIGINAL postings; dropped keys are
-    excluded from both sides. Mutually exclusive with ``salt``.
+    excluded from both sides.
 
     ``probe_unique``: set when ``probe_left`` posts at most ONE row per
     id (e.g. the substring detector's global-min fingerprint probe) — a
@@ -65,52 +90,8 @@ def band_candidate_pairs(
     deferred to the caller's verification (which already ends in a
     distinct). Only valid for callers whose downstream dedups.
     """
-    assert probe_left is None or not (salt and salt > 1), "probe+salt unsupported"
     keyed = postings.select(id_col, *key_cols)
-
-    if salt and salt > 1:
-        # the triangle-cell decomposition needs raw postings rows, so the
-        # salted path keeps the anti-join cap form
-        if max_bucket_size is not None:
-            sizes = keyed.groupBy(*key_cols).agg(F.count("*").alias("bucket_size"))
-            drops = sizes.filter(F.col("bucket_size") > max_bucket_size)
-            keyed = keyed.join(
-                F.broadcast(drops.select(*key_cols)), on=key_cols, how="left_anti"
-            )
-        else:
-            drops = (
-                keyed.select(*key_cols)
-                .limit(0)
-                .withColumn("bucket_size", F.lit(0).cast("long"))
-            )
-        # salted pairs are unique but ordered by cell, not id — normalize
-        pairs = salted_all_pairs(keyed, key_cols, id_col, salt).select(
-            F.least("id1", "id2").alias("id1"),
-            F.greatest("id1", "id2").alias("id2"),
-        )
-        return PairGenResult(pairs.select("id1", "id2").distinct(), drops)
-
-    # single-pass grouped form (r6): ONE shuffle builds the inverted index
-    # as grouped posting lists — bucket size, the cap filter, and pair
-    # generation all come from the same aggregation, replacing the former
-    # bucket-size aggregation + broadcast anti-join + key self-join
-    # (which shuffled the postings twice and scanned them four ways).
-    grouped = keyed.groupBy(*key_cols).agg(
-        F.sort_array(F.collect_list(id_col)).alias("members"),
-        F.count("*").alias("bucket_size"),
-    )
-    if max_bucket_size is not None:
-        drops = grouped.where(F.col("bucket_size") > max_bucket_size).select(
-            *key_cols, "bucket_size"
-        )
-        kept = grouped.where(F.col("bucket_size") <= max_bucket_size)
-    else:
-        drops = (
-            keyed.select(*key_cols)
-            .limit(0)
-            .withColumn("bucket_size", F.lit(0).cast("long"))
-        )
-        kept = grouped
+    kept, drops = _capped_buckets(keyed, key_cols, F.col(id_col), max_bucket_size)
 
     if probe_left is not None:
         # asymmetric probe join: probe rows hit the grouped index bucket
@@ -148,33 +129,3 @@ def band_candidate_pairs(
     # adaptive.coalescePartitions.minPartitionSize setting (session.py).
     return PairGenResult(pairs.select("id1", "id2").distinct(), drops)
 
-
-def salted_all_pairs(
-    keyed: DataFrame, key_cols: list[str], id_col: str, salt: int
-) -> DataFrame:
-    """Exact all-pairs within each key bucket via triangle-cell salting.
-
-    Assign each row a cell c = hash(id) mod salt. For the unordered cell
-    pair (i ≤ j): the left relation replicates each row with c = i to every
-    j ≥ i, the right relation keeps rows at their own cell, and the join key
-    is (key, j). A pair (a at cell ca ≤ cb of b) is then produced exactly
-    once — at join cell cb — and the tie ca == cb is broken by id order.
-    The effect: a bucket of n rows is processed as salt² cells of ~n/salt
-    rows instead of one quadratic task.
-    """
-    c = F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt)).cast("int")
-    base = keyed.withColumn("_cell", c)
-    left = base.select(
-        *key_cols,
-        F.col(id_col).alias("id1"),
-        F.col("_cell").alias("_c1"),
-        F.explode(F.sequence(F.col("_cell"), F.lit(salt - 1))).alias("_j"),
-    )
-    right = base.select(
-        *key_cols, F.col(id_col).alias("id2"), F.col("_cell").alias("_j"),
-    ).withColumn("_c2", F.col("_j"))
-    joined = left.join(right, on=[*key_cols, "_j"])
-    keep = (F.col("_c1") < F.col("_c2")) | (
-        (F.col("_c1") == F.col("_c2")) & (F.col("id1") < F.col("id2"))
-    )
-    return joined.where(keep).select(*key_cols, "id1", "id2")

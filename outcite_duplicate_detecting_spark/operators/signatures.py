@@ -20,10 +20,10 @@ dominant map-side cost).
 
 Semantics: shingle *identity* (and hence exact-Jaccard verification,
 minhash banding, simhash folding) is preserved — equal word sequences map
-to equal hashes. The hash family differs from the standalone operators'
-string-FNV (reference-parity simhash stays in operators/simhash.py), so
-signatures are not byte-identical across the two paths; verified pair
-sets agree up to 64-bit collisions (~1e-14/pair).
+to equal hashes. The kernels and hash family are the standalone
+detectors' own (minhash.add_signature, simhash.add_simhash,
+substring.fingerprint_udf), so for the same config each signature equals
+its standalone counterpart.
 """
 
 from __future__ import annotations

@@ -3,8 +3,8 @@
 Algorithmic parity with the reference's simhash pass
 (/root/reference/code/blocking/code/simhash_components_disk_v3.py):
 
-- per-feature FNV-1a 64 hashes (:159-177) → bit-majority fold into one
-  64-bit signature (feats2docint, :182-187),
+- per-feature 64-bit hashes → bit-majority fold into one 64-bit signature
+  (feats2docint, :182-187),
 - candidate generation: with the signature split into 8 byte-blocks and
   Hamming radius k=7, any pair within radius must agree on ≥1 whole block
   (pigeonhole; the reference realizes this as 8 lexsort orderings,
@@ -12,18 +12,22 @@ Algorithmic parity with the reference's simhash pass
 - verification: popcount(sig1 XOR sig2) ≤ k (dif, :179-180) — in Spark a
   built-in: bit_count(xor) (SURVEY.md §2.3).
 
-The fold runs as one Arrow-batched pandas UDF; within a batch ALL grams of
-all docs are hashed through one padded byte-matrix FNV pass and the bit
-counts reduce per-doc via np.add.reduceat — no per-gram Python loop.
+The hash family is the pipeline sign stage's wordhash kernel (and the
+``dedup_simhash`` DuckDB oracle's): each word is FNV-1a-hashed once and
+word n-gram hashes derive from the word hashes by vector arithmetic
+(functions/hashing.hash_shingles_from_word_hashes). Signature values
+therefore differ from the reference's string-FNV over gram strings
+(:159-177); the Hamming structure is the same (equal word sequences ⇒
+equal feature hashes).
 
 Scale note (10^12 docs): 8-bit block keys collide at rate 1/256, so the
 naive candidate join is quadratic at web scale. Controls, in order:
 (1) collapse exact dups first (operators/dedup.collapse_exact),
 (2) ``max_bucket_size`` cap with drop counters (reference guard analogue,
     /root/reference/code/common.py:96),
-(3) the ``bits_per_band=16`` configuration (4 blocks, exact for k ≤ 3) whose
-    keys collide at 1/65536 — the recommended web-scale setting,
-(4) triangle-cell salting of hot blocks (operators/joins.salted_all_pairs).
+(3) the ``bits_per_band=16`` configuration (4 blocks, exact for k ≤ 3;
+    exact for k ≤ 7 with ``multi_probe``) whose keys collide at 1/65536 —
+    the recommended web-scale setting.
 """
 
 from __future__ import annotations
@@ -42,13 +46,12 @@ from ..functions.hashing import (
     simhash64,
 )
 from ..functions.partitioning import spread_small_input
-from ..functions.text import char_ngrams, py_word_shingles, py_words, word_shingles
-from .joins import PairGenResult, band_candidate_pairs
+from ..functions.text import py_words
+from .joins import PairGenResult, _capped_buckets, band_candidate_pairs
 
 
 @dataclass
 class SimHashConfig:
-    feature: str = "word"  # "word": distinct word n-grams; "char": char n-grams
     # word BIgrams by default: unigram sets collapse on narrow vocabularies
     # (every doc ≈ the whole vocab ⇒ hamming ≈ 0 between unrelated docs),
     # while bigrams keep near-dup pairs ≤ k and random pairs far above it
@@ -65,18 +68,6 @@ class SimHashConfig:
     # probabilistic.
     multi_probe: bool = False
     max_bucket_size: int | None = 25000
-    salt: int | None = None
-    # "wordhash" (default, word features only): FNV-hash each word once,
-    # derive gram hashes from word hashes by vector arithmetic
-    # (functions/hashing.hash_shingles_from_word_hashes — the unified
-    # sign-stage kernel, ~45× cheaper than string-FNV over every gram).
-    # Signature VALUES differ from the string-FNV family but the Hamming
-    # structure is the same (equal word sequences ⇒ equal feature hashes).
-    # "python": gram strings built + FNV-1a-hashed in-UDF — bit-parity with
-    # the reference's hash choice (simhash_components_disk_v3.py:159-177).
-    # "catalyst-xxhash64": grams + hashes as JVM expressions, UDF folds longs.
-    # "catalyst-fnv1a": gram strings built JVM-side, hashed in-UDF.
-    hash_fn: str = "wordhash"
 
     @property
     def bands(self) -> int:
@@ -91,100 +82,26 @@ class SimHashConfig:
         return self.hamming_k < self.bands
 
 
-def _fold_hash_matrix(list_of_hash_arrays: list[np.ndarray]) -> np.ndarray:
-    """Per-doc bit-majority fold (simhash64 per row).
-
-    Deliberately NOT a whole-batch unpackbits+reduceat: reduceat on the
-    uint8 bit matrix silently wraps at 256 grams, and the 20MB-per-batch
-    bit matrix churns memory across 32 concurrent workers. The per-doc
-    fold is exact (int64 sums), allocates ~30KB at a time, and is plenty
-    fast (~60µs/doc)."""
-    out = np.empty(len(list_of_hash_arrays), dtype=np.uint64)
-    for i, a in enumerate(list_of_hash_arrays):
-        out[i] = simhash64(np.asarray(a, dtype=np.uint64))
-    return out
-
-
-def simhash_fold_udf(hash_fn: str = "xxhash64"):
-    """pandas UDF folding per-gram hashes into a 64-bit simhash signature.
-
-    xxhash64 mode receives array<long> (grams hashed JVM-side); fnv1a mode
-    receives array<string> and hashes in-UDF (reference hash parity). The
-    fold itself is one unpackbits + np.add.reduceat per Arrow batch.
-    """
-
-    if hash_fn == "fnv1a":
-
-        @F.pandas_udf(T.LongType())
-        def fold_strings(grams: pd.Series) -> pd.Series:
-            lists = [list(g) if g is not None else [] for g in grams]
-            arrays = [fnv1a64_strings(g) for g in lists]
-            return pd.Series(_fold_hash_matrix(arrays).view(np.int64))
-
-        return fold_strings
-
-    @F.pandas_udf(T.LongType())
-    def fold_hashes(hashes: pd.Series) -> pd.Series:
-        arrays = [
-            np.asarray(h, dtype=np.int64).view(np.uint64) if h is not None else np.empty(0, np.uint64)
-            for h in hashes
-        ]
-        return pd.Series(_fold_hash_matrix(arrays).view(np.int64))
-
-    return fold_hashes
-
-
 def add_simhash(
     df: DataFrame, cfg: SimHashConfig, text_col: str = "text", out_col: str = "simhash"
 ) -> DataFrame:
-    """Word-level features by default: the reference's simhash also hashes
-    word/field features, not raw character windows
-    (simhash_components_disk_v3.py hashes representation feature strings).
-    Char-gram mode kept for char-noise-dominated corpora — but note that on
-    narrow-vocabulary text the char-gram *set* of unrelated documents
+    """Append the 64-bit signature of each text's distinct word
+    ``gram_n``-grams. Word features, as the reference's simhash hashes
+    word/field features rather than raw character windows
+    (simhash_components_disk_v3.py hashes representation feature strings);
+    on narrow-vocabulary text the char-gram *set* of unrelated documents
     largely coincides, which makes char-gram simhash collide at k=7."""
-    if cfg.hash_fn == "wordhash" and cfg.feature == "word":
-        n = cfg.gram_n
+    n = cfg.gram_n
 
-        @F.pandas_udf(T.LongType())
-        def sign_wordhash(texts: pd.Series) -> pd.Series:
-            out = np.empty(len(texts), dtype=np.uint64)
-            for i, t in enumerate(texts):
-                wh = fnv1a64_strings(py_words(t))
-                out[i] = simhash64(hash_shingles_from_word_hashes(wh, n))
-            return pd.Series(out.view(np.int64))
+    @F.pandas_udf(T.LongType())
+    def sign_wordhash(texts: pd.Series) -> pd.Series:
+        out = np.empty(len(texts), dtype=np.uint64)
+        for i, t in enumerate(texts):
+            wh = fnv1a64_strings(py_words(t))
+            out[i] = simhash64(hash_shingles_from_word_hashes(wh, n))
+        return pd.Series(out.view(np.int64))
 
-        return df.withColumn(out_col, sign_wordhash(F.col(text_col)))
-
-    if cfg.hash_fn in ("python", "wordhash"):
-        n, feature = cfg.gram_n, cfg.feature
-
-        @F.pandas_udf(T.LongType())
-        def sign_text(texts: pd.Series) -> pd.Series:
-            arrays = []
-            for t in texts:
-                if feature == "word":
-                    grams = py_word_shingles(t, n)
-                else:
-                    low = (t or "").lower()
-                    grams = (
-                        list(dict.fromkeys(low[i : i + n] for i in range(len(low) - n + 1)))
-                        if len(low) > n
-                        else [low]
-                    )
-                arrays.append(fnv1a64_strings(grams))
-            return pd.Series(_fold_hash_matrix(arrays).view(np.int64))
-
-        return df.withColumn(out_col, sign_text(F.col(text_col)))
-
-    if cfg.feature == "word":
-        grams = word_shingles(text_col, cfg.gram_n)
-    else:
-        grams = char_ngrams(text_col, cfg.gram_n)
-    if cfg.hash_fn == "catalyst-fnv1a":
-        return df.withColumn(out_col, simhash_fold_udf("fnv1a")(grams))
-    gram_hashes = F.transform(grams, lambda s: F.xxhash64(s))
-    return df.withColumn(out_col, simhash_fold_udf("xxhash64")(gram_hashes))
+    return df.withColumn(out_col, sign_wordhash(F.col(text_col)))
 
 
 def block_postings(
@@ -243,8 +160,8 @@ def simhash_pairs(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")), key="id"
     )
     signed = add_simhash(base, cfg, text_col="text").select("id", "simhash")
-    if cfg.multi_probe or (cfg.salt and cfg.salt > 1):
-        # multi-probe/salt consume `signed` twice (index + probe sides);
+    if cfg.multi_probe:
+        # multi-probe consumes `signed` twice (index + probe sides);
         # materialize so the signing UDF runs once. The default grouped
         # path is a single linear chain — no checkpoint needed.
         signed = signed.localCheckpoint(eager=True)
@@ -274,39 +191,16 @@ def simhash_verified_pairs(
     probe(b) hits band(a)), so the plain ``id1 < id2`` predicate keeps
     exactly one instance of every pair; no double-orientation pass needed.
     """
-    if cfg.salt and cfg.salt > 1:
-        # triangle-cell salting needs the generic pair generator; verify
-        # joins back (the salted path is for corpora with hot bands where
-        # candidate volume is dominated by true near-dup mass anyway)
-        s = signed.select(
-            F.col(id_col).alias("id"), F.col(sig_col).alias("simhash")
-        )
-        cands = simhash_candidate_pairs(s, cfg, id_col="id")
-        return hamming_verify(cands.pairs, s, cfg), cands.drops
-    # grouped single-pass form (r6, mirrors joins.band_candidate_pairs):
-    # ONE shuffle groups the index postings into per-bucket member lists —
-    # bucket size, the cap filter, and pair generation come from the same
-    # aggregation (formerly: a bucket-size aggregation + broadcast
-    # anti-joins + a two-sided key join). The Hamming filter still runs
-    # inside whole-stage codegen directly on the explode output, so no
-    # candidate set ever materializes.
+    # grouped single-pass form (r6): ONE shuffle groups the index postings
+    # into per-bucket member lists — bucket size, the cap filter, and pair
+    # generation come from the same aggregation (joins._capped_buckets,
+    # shared with band_candidate_pairs). The Hamming filter runs inside
+    # whole-stage codegen directly on the explode output, so no candidate
+    # set ever materializes.
     postings = block_postings(signed, cfg, id_col=id_col, sig_col=sig_col, keep_sig=True)
-    grouped = postings.groupBy("band_key").agg(
-        F.sort_array(F.collect_list(F.struct("id", "sig"))).alias("members"),
-        F.count("*").alias("bucket_size"),
+    kept, drops = _capped_buckets(
+        postings, ["band_key"], F.struct("id", "sig"), cfg.max_bucket_size
     )
-    if cfg.max_bucket_size is not None:
-        drops = grouped.where(F.col("bucket_size") > cfg.max_bucket_size).select(
-            "band_key", "bucket_size"
-        )
-        kept = grouped.where(F.col("bucket_size") <= cfg.max_bucket_size)
-    else:
-        drops = (
-            postings.select("band_key")
-            .limit(0)
-            .withColumn("bucket_size", F.lit(0).cast("long"))
-        )
-        kept = grouped
     if cfg.multi_probe:
         # a ≤1-bit flipped band matches in BOTH probe directions (XOR is
         # symmetric), so least/greatest keeps exactly one instance
@@ -388,7 +282,6 @@ def simhash_candidate_pairs(
         key_cols=["band_key"],
         id_col="id",
         max_bucket_size=cfg.max_bucket_size,
-        salt=cfg.salt,
         probe_left=probe,
     )
 

@@ -9,7 +9,7 @@ structure drives the recall ≥ 0.99 gate:
 - fuzzy clusters (character-level noise; SimHash regime)
 - substring dups (text A wholly contained in B, shared run ≥ 50 chars)
 - hard negatives (same template vocabulary, Jaccard ≤ 0.5)
-- one hot cluster holding ~5% of rows (exercises skew salting and the
+- one hot cluster holding ~5% of rows (exercises skew and the
   oversize-bucket guard — reference analogue /root/reference/code/common.py:96)
 
 Generation is pure numpy with a fixed seed; row content is a function of

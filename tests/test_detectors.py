@@ -10,9 +10,13 @@ from outcite_duplicate_detecting_spark.operators.dedup import (
     exact_duplicates,
     jaccard_pairs,
 )
-from outcite_duplicate_detecting_spark.operators.joins import band_candidate_pairs, salted_all_pairs
+from outcite_duplicate_detecting_spark.operators.joins import band_candidate_pairs
 from outcite_duplicate_detecting_spark.operators.minhash import MinHashConfig, minhash_lsh_pairs
-from outcite_duplicate_detecting_spark.operators.simhash import SimHashConfig, simhash_pairs
+from outcite_duplicate_detecting_spark.operators.simhash import (
+    SimHashConfig,
+    simhash_pairs,
+    simhash_verified_pairs,
+)
 from outcite_duplicate_detecting_spark.operators.substring import SubstringConfig, substring_pairs
 from outcite_duplicate_detecting_spark.sources.pages import CorpusSpec, generate_pages_pdf
 
@@ -104,40 +108,6 @@ def test_minhash_lsh_recall_and_precision(spark, corpus):
     assert len(got) >= 0.99 * len(want)
 
 
-def brute_simhash_pairs(pdf, k=7, n=2):
-    def grams(t):
-        w = [x for x in t.lower().split() if x]
-        return list(
-            dict.fromkeys(
-                " ".join(w[i : i + n]) for i in range(max(len(w) - n + 1, 1))
-            )
-        )
-
-    sigs = {}
-    for r in pdf.itertuples():
-        h = fnv1a64_strings(grams(r.text))
-        sigs[r.doc_id] = simhash64(h)
-    ids = sorted(sigs)
-    out = set()
-    for i, a in enumerate(ids):
-        for b in ids[i + 1 :]:
-            if bin(sigs[a] ^ sigs[b]).count("1") <= k:
-                out.add((a, b))
-    return out
-
-
-def test_simhash_pigeonhole_exact_fnv(spark, corpus):
-    """python/string-FNV mode: signatures bit-match the reference fold."""
-    pdf, df = corpus
-    want = brute_simhash_pairs(pdf, k=7)
-    cfg = SimHashConfig(hamming_k=7, hash_fn="python")
-    assert cfg.exactness_holds()
-    verified, drops = simhash_pairs(df, cfg)
-    got = {(r["id1"], r["id2"]) for r in verified.collect()}
-    assert drops.count() == 0
-    assert got == want  # pigeonhole ⇒ EXACT, not approximate
-
-
 def brute_wordhash_simhash_sigs(pdf, n=2):
     """Brute signatures under the default wordhash kernel (the unified
     sign-stage hash family: FNV per word, shifted-slice gram combiner)."""
@@ -166,33 +136,7 @@ def test_simhash_pigeonhole_exact_wordhash_default(spark, corpus):
         if bin(sigs[a] ^ sigs[b]).count("1") <= 7
     }
     cfg = SimHashConfig(hamming_k=7)
-    assert cfg.hash_fn == "wordhash" and cfg.exactness_holds()
-    verified, drops = simhash_pairs(df, cfg)
-    got = {(r["id1"], r["id2"]) for r in verified.collect()}
-    assert drops.count() == 0
-    assert got == want
-
-
-def test_simhash_pigeonhole_exact_xxhash(spark, corpus):
-    """catalyst-xxhash64 mode: the band join finds exactly the ≤k pairs of
-    the signatures it computed (pigeonhole), and signatures are stable."""
-    pdf, df = corpus
-    cfg = SimHashConfig(hamming_k=7, hash_fn="catalyst-xxhash64")
-    from outcite_duplicate_detecting_spark.operators.simhash import add_simhash
-
-    sigs = {
-        r["doc_id"]: r["simhash"]
-        for r in add_simhash(
-            df.select("doc_id", "text"), cfg
-        ).select("doc_id", "simhash").collect()
-    }
-    ids = sorted(sigs)
-    want = {
-        (a, b)
-        for i, a in enumerate(ids)
-        for b in ids[i + 1 :]
-        if bin((sigs[a] ^ sigs[b]) & (2**64 - 1)).count("1") <= 7
-    }
+    assert cfg.exactness_holds()
     verified, drops = simhash_pairs(df, cfg)
     got = {(r["id1"], r["id2"]) for r in verified.collect()}
     assert drops.count() == 0
@@ -267,18 +211,23 @@ def test_substring_minfp_recall_adversarial_ties(spark, seed):
     assert got == want
 
 
-def test_salted_all_pairs_equals_naive(spark):
+def test_band_candidate_pairs_equals_brute_force(spark):
+    """Hot keys (300 ids over 5 keys): the grouped generator emits exactly
+    the within-key id pairs, each once."""
+    import itertools
+
     rng = np.random.RandomState(3)
     rows = [(int(i), int(k)) for i, k in enumerate(rng.randint(0, 5, size=300))]
     df = spark.createDataFrame(rows, "id long, band_key long")
-    naive = band_candidate_pairs(df, ["band_key"], "id").pairs
-    salted = band_candidate_pairs(df, ["band_key"], "id", salt=4).pairs
-    a = {(r["id1"], r["id2"]) for r in naive.collect()}
-    b = {(r["id1"], r["id2"]) for r in salted.collect()}
-    assert a == b
-    # exactly-once check (no dup pairs pre-distinct)
-    raw = salted_all_pairs(df, ["band_key"], "id", 4)
-    assert raw.count() == raw.distinct().count()
+    by_key = {}
+    for i, k in rows:
+        by_key.setdefault(k, []).append(i)
+    want = {
+        p for ids in by_key.values() for p in itertools.combinations(sorted(ids), 2)
+    }
+    got = band_candidate_pairs(df, ["band_key"], "id").pairs.collect()
+    assert len(got) == len(want)
+    assert {(r["id1"], r["id2"]) for r in got} == want
 
 
 def test_bucket_cap_drops_accounted(spark):
@@ -333,12 +282,64 @@ def test_simhash_multiprobe_exact_k7_at_16bit(spark, corpus):
     assert got == want  # exact: no tail loss, no false positives
 
 
-def test_simhash_salted_equals_fused(spark, corpus):
-    """The triangle-salted fallback path produces the same verified pair
-    set as the fused join-verify (salting only re-cells the work)."""
-    pdf, df = corpus
-    v1, _ = simhash_pairs(df, SimHashConfig())
-    v2, _ = simhash_pairs(df, SimHashConfig(salt=4))
-    a = {(r["id1"], r["id2"], r["hamming_dist"]) for r in v1.collect()}
-    b = {(r["id1"], r["id2"], r["hamming_dist"]) for r in v2.collect()}
-    assert a == b
+def test_jaccard_pairs_no_self_pairs(spark):
+    """A repeated id must not pair with itself (id1 < id2 always holds)."""
+    rows = [
+        (5, "alpha beta gamma delta epsilon"),
+        (5, "alpha beta gamma delta epsilon"),
+        (7, "alpha beta gamma delta zeta"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = jaccard_pairs(df, threshold=0.5).collect()
+    assert not [r for r in got if r["id1"] >= r["id2"]]
+    assert {(r["id1"], r["id2"]) for r in got} == {(5, 7)}
+
+
+@pytest.mark.parametrize(
+    "cfg",
+    [
+        SimHashConfig(max_bucket_size=5),
+        SimHashConfig(bits_per_band=16, multi_probe=True, max_bucket_size=5),
+    ],
+    ids=["8x8", "16bit-probe"],
+)
+def test_simhash_verified_pairs_bucket_cap(spark, cfg):
+    """The fused join-verify reports an over-cap band in drops with its
+    size and still pairs docs through the other bands."""
+
+    def i64(u):
+        return u - 2**64 if u >= 2**63 else u
+
+    # six hot docs share an all-zero band 0 and differ in every other
+    # band, so hot pairs within hamming k can only come from band 0
+    zb = cfg.bits_per_band // 8
+    hot = {
+        i: int.from_bytes(bytes([0] * zb + [0x20 + i] * (8 - zb)), "little")
+        for i in range(6)
+    }
+    a = 0x1111111111111111
+    sigs = {**hot, 100: a, 101: a ^ 0b111}  # 100/101: 3 bits apart in band 0
+    signed = spark.createDataFrame(
+        [(i, i64(s)) for i, s in sigs.items()], "id long, simhash long"
+    )
+    ids = sorted(sigs)
+    brute = {
+        (x, y, bin(sigs[x] ^ sigs[y]).count("1"))
+        for i, x in enumerate(ids)
+        for y in ids[i + 1 :]
+        if bin(sigs[x] ^ sigs[y]).count("1") <= cfg.hamming_k
+    }
+    assert any(x in hot for x, _, _ in brute)  # the cap has pairs to lose
+
+    verified, drops = simhash_verified_pairs(signed, cfg)
+    got = {(r["id1"], r["id2"], r["hamming_dist"]) for r in verified.collect()}
+    assert got == {(100, 101, 3)}
+    assert [(r["band_key"], r["bucket_size"]) for r in drops.collect()] == [(0, 6)]
+
+    uncapped = SimHashConfig(
+        bits_per_band=cfg.bits_per_band, multi_probe=cfg.multi_probe, max_bucket_size=None
+    )
+    verified, drops = simhash_verified_pairs(signed, uncapped)
+    got = {(r["id1"], r["id2"], r["hamming_dist"]) for r in verified.collect()}
+    assert got == brute
+    assert drops.count() == 0
